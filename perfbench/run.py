@@ -1,6 +1,6 @@
 """Benchmark of the engine's sync path and a slice of its query fleet.
 
-    python3 perfbench/run.py --workload sync_cdc --seed 3 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload sync_cdc --seed 3 --seconds 5 --trace 0
     python3 perfbench/run.py --smoke          # every workload once, sf0.01
 
 Run from the root of a checkout.  Each run gets a fresh temp root under
@@ -18,7 +18,7 @@ The last line of standard output is one JSON object: ``correct``,
 with ``--trace 1`` the per-layer ones).  The line before it carries every
 end-to-end metric under the names the workload defines, with unit and
 sample count.  The exit code is 1 when any correctness check failed and
-2 when the run could not start.
+2 when the run could not start or completed no operation.
 """
 
 from __future__ import annotations
@@ -48,7 +48,7 @@ SCALE = {"sync_stdout": 0.02, "sync_lake": 0.05, "sync_cdc": 0.02, "fleet_slice"
 TABLES = {"sync_stdout": ("events", "orders"), "sync_cdc": ("orders",)}
 SMOKE_SCALE = 0.01
 WARM_SCALE = 0.001  # the corpus the sync workloads warm up on
-WORKER_TIMEOUT_S = 170
+WORKER_TIMEOUT_S = 160  # the whole run must end within 180 s
 
 # peak_rss_mb is reported on the named line but not here: the driver JVM's
 # high-water mark on fleet_slice moved between 1.4 and 2.3 GB from run to

@@ -2,9 +2,10 @@
 
 Each workload is a closed loop with one client: ``op`` issues one
 operation (a sync, a resume cycle or a fleet pass) and returns only after
-it completed.  ``prepare`` runs before the loop and ``finish`` after it;
-both are untimed and hold the correctness checks.  Every check failure is
-appended to ``ctx.errors``.
+it completed.  ``prepare`` (warm-up) runs before the loop and ``finish``
+after it.  Correctness checks run outside the timed region: in ``op``
+after its timer stops, or in ``finish``.  Every check failure is appended
+to ``ctx.errors``.
 """
 
 import glob
