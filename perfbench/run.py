@@ -47,7 +47,6 @@ import datagen  # noqa: E402
 SCALE = {"sync_stdout": 0.02, "sync_lake": 0.05, "sync_cdc": 0.02, "fleet_slice": 0.01}
 TABLES = {"sync_stdout": ("events", "orders"), "sync_cdc": ("orders",)}
 SMOKE_SCALE = 0.01
-WARM_SCALE = 0.001  # the corpus the sync workloads warm up on
 WORKER_TIMEOUT_S = 160  # the whole run must end within 180 s
 
 # peak_rss_mb is reported on the named line but not here: the driver JVM's
@@ -93,14 +92,16 @@ def _stop_group(proc: subprocess.Popen) -> None:
         except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
-    for sig in (signal.SIGTERM, signal.SIGKILL):
-        deadline = time.monotonic() + 10
-        while time.monotonic() < deadline:
-            try:
-                os.killpg(proc.pid, sig)
-            except ProcessLookupError:
-                return
-            time.sleep(0.2)
+    # what is left of its session (the driver JVM, Python workers) holds
+    # nothing the run still needs, and a JVM's graceful shutdown takes
+    # 1.5 s or so of every run
+    deadline = time.monotonic() + 10
+    while time.monotonic() < deadline:
+        try:
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            return
+        time.sleep(0.05)
 
 
 def _spawn(root: str, argv: list[str], log) -> tuple[subprocess.Popen, float]:
@@ -153,14 +154,12 @@ def run_once(workload: str, seed: int, seconds: float, trace: int,
         corpus = data_dir or os.path.join(root, "corpus")
         if not data_dir:
             datagen.write_tables(corpus, scale, seed, tables)
-        warm = os.path.join(root, "warm")
-        datagen.write_tables(warm, WARM_SCALE, seed, tables)
         nproc = len(os.sched_getaffinity(0))
         result_path = os.path.join(root, "result.json")
         argv = ["--workload", workload, "--seed", str(seed),
                 "--seconds", str(seconds), "--trace", str(trace),
                 "--nproc", str(nproc), "--root", root, "--corpus", corpus,
-                "--warm", warm, "--result", result_path]
+                "--result", result_path]
         if trace:
             argv += ["--trace-out", os.path.join(
                 work_dir, "traces", f"{workload}-seed{seed}.jsonl")]
@@ -195,11 +194,23 @@ def summarize(workload: str, raw: dict) -> dict:
     secs = [o["s"] for o in plain]
     if not secs or (raw.get("trace") and not traced):
         raise RunError(f"no operation completed ({failed} of {attempted} failed)")
+    op_s = statistics.median(secs)
+    rate = statistics.median(o["records"] / o["s"] for o in plain)
+    query_s = {}
+    if workload == "fleet_slice":
+        # a pass as the sum of per-query medians, so a slow spell on the
+        # box costs one query one sample rather than the whole pass
+        names = sorted({q for o in plain for q in o["parts"]})
+        query_s = {q: statistics.median(o["parts"][q] for o in plain if q in o["parts"])
+                   for q in names}
+        if not query_s:
+            raise RunError(f"no fleet query completed ({failed} of {attempted} failed)")
+        op_s = sum(query_s.values())
+        rate = statistics.median(o["records"] for o in plain) / op_s
     e2e = {
         "setup_s": (raw["setup_s"], "s", 1),
-        "op_s_p50": (statistics.median(secs), "s", len(secs)),
-        "records_per_s": (statistics.median(o["records"] / o["s"] for o in plain),
-                          "rec/s", len(secs)),
+        "op_s_p50": (op_s, "s", len(secs)),
+        "records_per_s": (rate, "rec/s", len(secs)),
         "peak_rss_mb": (raw["peak_rss_mb"], "MB", 1),
         "failed_share": (failed / attempted if attempted else 1.0, "ratio", attempted),
     }
@@ -216,12 +227,9 @@ def summarize(workload: str, raw: dict) -> dict:
             named[f"resume_s_p{p}"] = (_percentile(secs, p), "s", len(secs))
     elif workload == "fleet_slice":
         named["fleet_s"] = e2e["op_s_p50"]
-        geo = [math.exp(statistics.fmean(math.log(x) for x in o["parts"].values()))
-               for o in plain if o["parts"]]
-        named["query_geomean_s"] = (statistics.median(geo), "s", len(geo))
-        names = {q for o in plain for q in o["parts"]}
-        named["query_s"] = ({q: statistics.median(o["parts"][q] for o in plain if q in o["parts"])
-                             for q in sorted(names)}, "s", len(plain))
+        named["query_geomean_s"] = (
+            statistics.geometric_mean(query_s.values()), "s", len(plain))
+        named["query_s"] = (query_s, "s", len(plain))
     layers = {}
     if traced:
         for name, _ in PER_LAYER[:-1]:

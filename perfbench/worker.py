@@ -88,11 +88,17 @@ def run(args, spark) -> dict:
     tracer = Tracer() if args.trace else None
     collector = StatusCollector(spark) if args.trace else None
     ctx = Context(spark=spark, nproc=args.nproc, root=args.root, corpus=args.corpus,
-                  warm=args.warm, seed=args.seed, collector=collector)
+                  seed=args.seed, collector=collector)
     phases = {}
     t = time.perf_counter()
     wl = WORKLOADS[args.workload](ctx)
-    wl.prepare()
+    if hasattr(wl, "prepare"):
+        wl.prepare()
+    # operations on the measured inputs whose times are dropped: the first
+    # ones run while the JVM is still compiling the hot paths, and a median
+    # taken on that downward trend moves with how fast a run warms
+    for k in range(getattr(wl, "warm_ops", 0)):
+        wl.op(-1 - k)
     phases["prepare"] = time.perf_counter() - t
 
     ops: list[dict] = []
@@ -150,7 +156,6 @@ def main() -> int:
     ap.add_argument("--nproc", type=int, required=True)
     ap.add_argument("--root", required=True)
     ap.add_argument("--corpus", required=True)
-    ap.add_argument("--warm", required=True)
     ap.add_argument("--result", required=True)
     ap.add_argument("--trace-out")
     args = ap.parse_args()

@@ -2,10 +2,11 @@
 
 Each workload is a closed loop with one client: ``op`` issues one
 operation (a sync, a resume cycle or a fleet pass) and returns only after
-it completed.  ``prepare`` (warm-up) runs before the loop and ``finish``
-after it.  Correctness checks run outside the timed region: in ``op``
-after its timer stops, or in ``finish``.  Every check failure is appended
-to ``ctx.errors``.
+it completed.  An optional ``prepare`` and then ``warm_ops`` operations
+whose times are dropped (the warm-up, on the measured inputs) run before
+the loop, and ``finish`` after it.  Correctness checks run outside the
+timed region: in ``op`` after its timer stops, or in ``finish``.  Every
+check failure is appended to ``ctx.errors``.
 """
 
 import glob
@@ -34,7 +35,6 @@ class Context:
     nproc: int
     root: str        # this run's temp root
     corpus: str      # directory of <table>.parquet
-    warm: str        # a tiny corpus of the same tables, for warm-up
     seed: int
     errors: list[str] = field(default_factory=list)
     tracer: Any = None     # set while a traced operation runs
@@ -105,7 +105,8 @@ class SyncStdout:
     ``orders`` (computed column, row filter, dropped column)."""
 
     name = "sync_stdout"
-    min_ops = 3   # the first operation is still warming; the median needs three
+    warm_ops = 1  # the cold sync; the next ones are flat
+    min_ops = 4   # syncs spread about 10% within a run
 
     def __init__(self, ctx: Context):
         self.ctx = ctx
@@ -130,10 +131,6 @@ class SyncStdout:
         self.order_cols = sorted(
             [c for c in orders.column_names if c != "o_orderpriority"] + ["o_total_k"])
         self.bytes = None
-
-    def prepare(self) -> None:
-        warm = dict(self.config, source_config={"path": self.ctx.warm})
-        Engine(self.ctx.spark, warm).sync(out=ByteCounter())
 
     def _check_lines(self, lines: list[str]) -> None:
         ck = self.ctx.check
@@ -193,16 +190,17 @@ class SyncLake:
     in parallel, with warn-mode expectations."""
 
     name = "sync_lake"
+    warm_ops = 1
 
     def __init__(self, ctx: Context):
         self.ctx = ctx
         self.expected = {t: pq.read_metadata(os.path.join(ctx.corpus, f"{t}.parquet")).num_rows
                          for t in TABLES}
 
-    def _config(self, out: str, corpus: str) -> dict:
+    def _config(self, out: str) -> dict:
         return {
             "source": "dataset_dir",
-            "source_config": {"path": corpus},
+            "source_config": {"path": self.ctx.corpus},
             "parallelism": self.ctx.nproc,
             "sink": {"type": "files", "path": out},
             "expectations": {
@@ -215,15 +213,10 @@ class SyncLake:
             "expectations_mode": "warn",
         }
 
-    def prepare(self) -> None:
-        out = os.path.join(self.ctx.root, "lake", "warm")
-        Engine(self.ctx.spark, self._config(out, self.ctx.warm)).sync()
-        shutil.rmtree(out, ignore_errors=True)
-
     def op(self, i: int) -> OpResult:
         out = os.path.join(self.ctx.root, "lake", f"op{i}")
         t0 = time.perf_counter()
-        res = Engine(self.ctx.spark, self._config(out, self.ctx.corpus)).sync()
+        res = Engine(self.ctx.spark, self._config(out)).sync()
         dt = time.perf_counter() - t0
         ck = self.ctx.check
         ck(res.stream_counts == self.expected,
@@ -272,7 +265,7 @@ class SyncCdc:
     cycles."""
 
     name = "sync_cdc"
-    min_ops = 3   # a median of three warm cycles
+    min_ops = 3   # a median of three cycles after prepare's warm-up cycle
 
     def __init__(self, ctx: Context):
         self.ctx = ctx
@@ -424,11 +417,12 @@ class SyncCdc:
 # ----------------------------------------------------------------- fleet
 
 # The slice: a TPC-H anchor, a sliced-test sweep (its time is mostly plan
-# build over the layered tail expressions), a similarity join verified by
-# an Arrow UDF (which needs the package on the Python workers), a token
-# aggregate and a keyed merge.
-FLEET = ("q1_pricing_summary", "welch_sliced_orders", "knn_lsh_verified",
-         "token_stats", "merge_upsert_orders")
+# build over the layered tail expressions), a token aggregate and a keyed
+# merge.  knn_lsh_verified (an Arrow-UDF similarity join) is left out: its
+# cold start and four passes cost about 15 s a run, which the benchmark's
+# time budget does not have.
+FLEET = ("q1_pricing_summary", "welch_sliced_orders", "token_stats",
+         "merge_upsert_orders")
 
 
 class FleetSlice:
@@ -436,22 +430,15 @@ class FleetSlice:
     ``clearCache()`` between queries; an operation is one pass."""
 
     name = "fleet_slice"
-    min_ops = 3   # a pass is about a run's window; the median needs three
+    warm_ops = 3  # the cold pass, and two more: welch's plan build warms slowly
+    min_ops = 5   # per-query medians over five passes (about 18 s)
 
     def __init__(self, ctx: Context):
         self.ctx = ctx
         self.rows: dict[str, int] = {}
         self.checked: set[str] = set()
 
-    def prepare(self) -> None:
-        # an untimed cold pass over the tiny corpus: plan-building JIT and
-        # the Python workers, at a fraction of a full pass's cost
-        self._pass(self.ctx.warm, timed=False)
-
     def op(self, i: int) -> OpResult:
-        return self._pass(self.ctx.corpus, timed=True)
-
-    def _pass(self, corpus: str, timed: bool) -> OpResult:
         from tap_airbyte_wrapper_spark.plans import QUERIES
 
         from oracle import OracleGate
@@ -467,7 +454,7 @@ class FleetSlice:
                 if collector is not None:
                     ids0 = collector.job_ids()
                     t0 = time.perf_counter()
-                df = QUERIES[name](spark, corpus)
+                df = QUERIES[name](spark, self.ctx.corpus)
                 t1 = time.perf_counter()
                 if collector is not None:
                     ids1 = collector.job_ids()
@@ -489,7 +476,7 @@ class FleetSlice:
                 parts[name] = (t1 - t0) + (t2 - t1b)
             else:
                 parts[name] = t2 - t0
-            if timed and name not in self.checked:
+            if name not in self.checked:
                 gate = gate or OracleGate(self.ctx.corpus, self.ctx.nproc)
                 pdf = df.toPandas()
                 self.rows[name] = len(pdf)
